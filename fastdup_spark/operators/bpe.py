@@ -42,7 +42,6 @@ oracle — the COVERAGE.md row is a T row).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 from dataclasses import dataclass
 
@@ -60,14 +59,13 @@ _SPACE_MARK = "Ġ"  # 'Ġ', the GPT-2 leading-space convention
 # distributed explode+groupBy+collect PER MERGE is 32k Spark jobs at a
 # real vocabulary size, while webtext's distinct-word table is 1e7-1e8
 # rows — driver-sized). Above the gate the distributed loop still runs.
-_DRIVER_BPE_WORDS_MAX = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_WORDS",
-                                           str(2_000_000)))
+_DRIVER_BPE_WORDS_MAX = 2_000_000
 
 # segment_expr: merge tables LONGER than this switch from the chained
 # regexp_replace form (plan depth = n_merges; a 32k-merge chain is a
 # 64KB-codegen blowup) to one Arrow pass walking the ranked merge table
 # per word. Both forms have identical semantics (parity-tested).
-_SEGMENT_EXPR_MAX = int(os.environ.get("SPARK_GRAFT_BPE_EXPR_MERGES", "64"))
+_SEGMENT_EXPR_MAX = 64
 
 
 def _quote_re(s: str) -> str:

@@ -21,15 +21,22 @@ no Catalyst extension needed.
 
 Determinism: component id == min doc_id of the component (stable across
 partitionings and cluster sizes).
+
+Edge sets of integral ids at or below ``_CC_DRIVER_EDGES_MAX`` skip the
+rounds: they are collected through Arrow and resolved by ``union_find``,
+the package's one union-find kernel (vectorized Shiloach-Vishkin hooking).
+The per-cluster semdedup kernel (operators/semdedup.py) and the incremental
+CC contraction (streaming/incremental.py, via ``label_changes``) call the
+same kernel. The CC edges themselves are defined once, in plans/stages.py
+(``cc_edges``), for both the staged run and the incremental update.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 # Edge sets at or below this size resolve on the driver (arrow collect +
 # vectorized union-find) instead of the iterative star rounds: each star
@@ -40,9 +47,9 @@ from pyspark.sql import functions as F
 # driver-bounded budget class as the kmeans centroid collect and the
 # incremental _DRIVER_IDS_MAX paths. The distributed algorithm is
 # unchanged above the gate (the 100-TB path; a graph with more edges than
-# the gate never touches the driver). Env-overridable for ops; 0 disables.
-_CC_DRIVER_EDGES_MAX = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES",
-                                          str(2_000_000)))
+# the gate never touches the driver). The incremental contraction uses the
+# same gate.
+_CC_DRIVER_EDGES_MAX = 2_000_000
 
 
 def _bidir(edges: DataFrame) -> DataFrame:
@@ -99,7 +106,8 @@ def _union_find_edges(parent: np.ndarray, u: np.ndarray,
     """Vectorized union over index edge arrays (Shiloach-Vishkin hook +
     full pointer-jumping). np.minimum.at resolves conflicting hooks
     monotonically, so the fixpoint — min index per component — does not
-    depend on edge order. O(log n) passes over the arrays."""
+    depend on edge order. O(log n) passes over the arrays. The returned
+    parent array is fully compressed: parent[i] is i's root."""
     while True:
         while True:
             p2 = parent[parent]
@@ -115,22 +123,42 @@ def _union_find_edges(parent: np.ndarray, u: np.ndarray,
         np.minimum.at(parent, hi[diff], lo[diff])
 
 
+def union_find(src: np.ndarray, dst: np.ndarray
+               ) -> tuple[np.ndarray, np.ndarray]:
+    """(ids, labels) for an int64 edge list: every endpoint id, sorted,
+    and its component label = the min member id."""
+    ids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    parent = _union_find_edges(np.arange(ids.size, dtype=np.int64),
+                               inv[:src.size], inv[src.size:])
+    # ids is sorted, so the min component INDEX is the min member ID
+    return ids, ids[parent]
+
+
+def label_changes(src: np.ndarray, dst: np.ndarray) -> dict[int, int]:
+    """{id: label} for the endpoints whose min-member label is not their
+    own id — the merge map of a contraction over label edges (identity
+    entries omitted)."""
+    ids, labels = union_find(src, dst)
+    moved = ids != labels
+    return dict(zip(ids[moved].tolist(), labels[moved].tolist()))
+
+
+def collect_edges(edges: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Collect an integral (src, dst) edge set through Arrow as int64
+    arrays — one Spark job."""
+    pdf = edges.select("src", "dst").toPandas()
+    return (pdf["src"].to_numpy(dtype=np.int64),
+            pdf["dst"].to_numpy(dtype=np.int64))
+
+
 def _driver_components(edges: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect the (already distinct,
-    checkpointed) edge set via Arrow, union-find in numpy, return the
-    same (doc_id, component_id = min member id) table the star rounds
-    converge to."""
-    pdf = edges.toPandas()
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    uids, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    parent = _union_find_edges(
-        np.arange(uids.size, dtype=np.int64),
-        inv[:src.size], inv[src.size:])
-    # uids is sorted, so the min component INDEX is the min member ID
+    """Small-graph fast path: the same (doc_id, component_id = min member
+    id) table the star rounds converge to, from one Arrow collect of the
+    (already distinct, checkpointed) edge set."""
     import pandas as pd
-    out = pd.DataFrame({"doc_id": uids, "component_id": uids[parent]})
-    return edges.sparkSession.createDataFrame(out)
+    ids, labels = union_find(*collect_edges(edges))
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"doc_id": ids, "component_id": labels}))
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
@@ -144,7 +172,8 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     (fastdup_controller.py:440).
 
     ``driver_edges_max`` gates the small-graph driver fast path (default
-    ``_CC_DRIVER_EDGES_MAX``; 0 forces the distributed star rounds).
+    ``_CC_DRIVER_EDGES_MAX``; 0 forces the distributed star rounds). Only
+    integral ids take that path; others always run the star rounds.
     """
     spark = edges.sparkSession
     e = edges.select("src", "dst").filter("src != dst").distinct()
@@ -164,7 +193,9 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     e = e.localCheckpoint(eager=True)
     gate = _CC_DRIVER_EDGES_MAX if driver_edges_max is None \
         else driver_edges_max
-    if gate and e.count() <= gate:
+    integral = all(isinstance(e.schema[c].dataType, IntegralType)
+                   for c in ("src", "dst"))
+    if gate and integral and e.count() <= gate:
         # one cheap count over checkpointed blocks buys skipping the whole
         # round loop (each round: ~5 shuffles + checkpoint + digest job)
         comp = _driver_components(e)

@@ -22,19 +22,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastdup_spark.config import PipelineConfig
-from fastdup_spark.functions.lcs import lcs_confirm
 from fastdup_spark.functions.signatures import with_signatures
-from fastdup_spark.functions.similarity import (
-    exact_jaccard_expr, hamming_expr, sig_jaccard_expr,
-)
+from fastdup_spark.functions.similarity import exact_jaccard_expr
 from fastdup_spark.operators.cc import connected_components
 from fastdup_spark.operators.dedup import duplicates_to_drop
 from fastdup_spark.operators.lsh import (
     band_buckets, bucket_stats, candidate_pairs, salt_buckets,
 )
-from fastdup_spark.operators.outliers import best_neighbor, outliers_by_percentile
-from fastdup_spark.operators.stats import doc_stats as doc_stats_op
-from fastdup_spark.operators.stats import summary_stats
+from fastdup_spark.plans import stages
 from fastdup_spark.plans.store import StageStore
 
 STAGES = ["extracted", "doc_stats", "signatures", "buckets",
@@ -259,20 +254,11 @@ class FastdupSpark:
         # one shuffle of the extracted text for that layout — the same price
         # an Iceberg bucket-partitioned ingest pays, once, at ingest.
         if not done("extracted"):
-            from fastdup_spark.functions.extract import extract_text_udf
             from fastdup_spark.plans.store import SHARD_COL, shard_expr
             n_sh = self._resolve_layout(pages, est_rows)
-            udf = extract_text_udf(cfg.min_text_chars)
-            ext = pages.withColumn("_ex", udf(F.col("html"))).select(
-                # doc_id = xxhash64(url): deterministic, order-independent
-                # identity (ref uses listing order, RUN.md:106-115 — ours must not)
-                F.xxhash64("url").alias("doc_id"),
-                "url", "warc_ts", "lang",
-                F.col("_ex.extracted_text").alias("text"),
-                F.col("_ex.error_code").alias("error_code"),
-                (F.col("_ex.error_code") == "").alias("is_valid"),
-            ).withColumn(SHARD_COL, shard_expr("doc_id", n_sh)) \
-             .repartition(F.col(SHARD_COL))
+            ext = stages.extract_pages(pages, cfg) \
+                .withColumn(SHARD_COL, shard_expr("doc_id", n_sh)) \
+                .repartition(F.col(SHARD_COL))
             marker = self.store.write(
                 ext, "extracted", self._chash,
                 partition_by=["is_valid", SHARD_COL],
@@ -297,29 +283,16 @@ class FastdupSpark:
         finally:
             pool.shutdown(wait=True)
 
-        # --- summary + manifest (ref: config.json + summary()) ---
-        # scalar counts come from the stage markers — no table re-scans
-        counts = self.store.read_json("extract_counts") or {}
-        n_valid = counts.get("valid", 0)
-        n_bad = counts.get("bad", 0)
-        summ = summary_stats(
-            n_pages=n_valid + n_bad, n_valid=n_valid, n_quarantined=n_bad,
-            component_info=self.store.read(self.spark, "component_info"),
-            n_pairs=self.store.read_marker("similarity")["rows"],
-            n_outliers=self.store.read_marker("outliers")["rows"],
-        )
-        # per-stage completion offsets (seconds since run start, from marker
-        # mtimes — free observability; stages skipped by resume are omitted)
+        # --- summary + manifest, with per-stage completion offsets (seconds
+        # since run start, from marker mtimes — free observability; stages
+        # skipped by resume are omitted)
         import os
         stage_s = {}
         for s in STAGES:
             mp = self.store.marker_path(s)
             if os.path.exists(mp) and os.path.getmtime(mp) >= t_run_start:
                 stage_s[s] = round(os.path.getmtime(mp) - t_run_start, 2)
-        manifest = {"config": self.config.to_dict(), "config_hash": self._chash,
-                    "summary": summ, "stage_completed_s": stage_s}
-        self.store.write_json(manifest, "run_manifest")
-        return summ
+        return stages.write_manifest(self, stage_completed_s=stage_s)
 
     def _run_stages(self, pool, docs, cfg, done) -> None:
         """Stages 2-7 (everything between extract and the manifest), sharing
@@ -328,18 +301,16 @@ class FastdupSpark:
         # independent of the signature path -> runs alongside stages 3-5
         def _doc_stats():
             if not done("doc_stats"):
-                st = doc_stats_op(docs.select("doc_id", "text"), id_col="doc_id")
-                self.store.write(st, "doc_stats", self._chash)
+                self.store.write(stages.doc_stats_rows(docs), "doc_stats",
+                                 self._chash)
         doc_stats_fut = pool.submit(_doc_stats)
 
         # --- stage 3: signatures (ref: atrain_features.dat) ---
         if not done("signatures"):
-            sigs = with_signatures(docs, cfg).select(
-                "doc_id", "minhash", "simhash", "shingles", "n_shingles")
             # same bucket(N, doc_id) layout as `extracted`: incremental
             # idempotency reads prune to the batch's shards (verdict r5 #2)
-            self.store.write_sharded(sigs, "signatures", self._chash,
-                                     self.n_shards)
+            self.store.write_sharded(stages.signature_rows(docs, cfg),
+                                     "signatures", self._chash, self.n_shards)
         sigs = self.store.read(self.spark, "signatures")
 
         # --- stage 4: LSH index + candidates (ref: HNSW index + k-NN probe) ---
@@ -378,127 +349,51 @@ class FastdupSpark:
 
         # --- stage 5: verify (ref: cosine threshold inside edge generation) ---
         if not done("pairs_scored"):
-            # ONE join per side fetching minhash+simhash+shingles together
-            # (two joins + two sig-table scans total, was four of each):
-            # the sig_jaccard prefilter still runs BEFORE the exact-Jaccard
-            # compute, it just no longer saves shipping shingles for the
-            # rejected pairs — measured 2.1s -> 1.2s on the 100k-page
-            # bench corpus, where most candidates survive the prefilter.
-            # (At a boilerplate-heavy selectivity where rejects dominate,
-            # the trade reverses; cfg.sig_jaccard_prefilter stays the
-            # knob that bounds how much exact-verify work runs either way.)
-            wide = sigs.select("doc_id", "minhash", "simhash", "shingles")
-            scored = (
-                cands
-                .join(wide.select(F.col("doc_id").alias("src"),
-                                  F.col("minhash").alias("mh_a"),
-                                  F.col("simhash").alias("sh_a"),
-                                  F.col("shingles").alias("sg_a")), "src")
-                .join(wide.select(F.col("doc_id").alias("dst"),
-                                  F.col("minhash").alias("mh_b"),
-                                  F.col("simhash").alias("sh_b"),
-                                  F.col("shingles").alias("sg_b")), "dst")
-                .withColumn("sig_jaccard", sig_jaccard_expr(F.col("mh_a"), F.col("mh_b")))
-                .withColumn("hamming", hamming_expr(F.col("sh_a"), F.col("sh_b")))
-                # cheap prefilter: only plausible pairs pay the exact verify
-                .filter(F.col("sig_jaccard") >= cfg.sig_jaccard_prefilter)
-                .withColumn("jaccard", exact_jaccard_expr(F.col("sg_a"), F.col("sg_b")))
-                .select("src", "dst", "sig_jaccard", "hamming", "jaccard")
-            )
-            self.store.write(scored, "pairs_scored", self._chash)
+            self.store.write(stages.score_pairs(cands, sigs, cfg),
+                             "pairs_scored", self._chash)
         scored = self.store.read(self.spark, "pairs_scored")
 
-        # --- tail stages: four independent groups, submitted concurrently ---
+        # --- tail stages (plans/stages.py): four independent groups,
+        # submitted concurrently ---
 
         def _similarity_knn():
-            # similarity table: ALL verified edges >= threshold (the >=0.99
-            # dup-pair recall contract is measured here, so no truncation)
-            sim = scored.filter(F.col("jaccard") >= cfg.threshold) \
-                        .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
+            sim = stages.similarity_rows(scored, cfg)
             if not done("similarity"):
                 self.store.write(sim, "similarity", self._chash,
                                  counters={"threshold": cfg.threshold})
-            # knn table ≈ the reference's similarity.csv contract: top
-            # nearest_neighbors_k=2 neighbors PER DOC, directed
-            # (/root/reference/fastdup/__init__.py:486,574 — W2). Bounds the
-            # reported table to <= k rows/doc even when a giant dup clique
-            # makes the full edge set quadratic in clique size. Derived
-            # straight from the in-scope filter of pairs_scored (same rows
-            # as the similarity table by construction) — no write->read
-            # barrier on the similarity write (round-4 verdict #5).
+            # knn derives straight from the in-scope filter of pairs_scored
+            # (same rows as the similarity table by construction) — no
+            # write->read barrier on the similarity write
             if not done("knn"):
-                from fastdup_spark.operators.knn import knn_truncate
-                self.store.write_sharded(knn_truncate(sim, cfg.knn_k), "knn",
-                                         self._chash, self.n_shards,
-                                         counters={"k": cfg.knn_k})
+                stages.write_knn(self, sim)
 
         def _containment():
-            # LCS containment confirm: sub-threshold candidates that may be
-            # verbatim-containment duplicates (north_rule confirm stage)
+            # LCS containment confirm (north_rule confirm stage)
             if done("containment"):
                 return
             if cfg.lcs_enabled:
-                sub = scored.filter(F.col("jaccard") < cfg.threshold).select("src", "dst")
-                texts = docs.select("doc_id", "text")
-                pt = (
-                    sub.join(texts.select(F.col("doc_id").alias("src"),
-                                          F.col("text").alias("text_a")), "src")
-                       .join(texts.select(F.col("doc_id").alias("dst"),
-                                          F.col("text").alias("text_b")), "dst")
-                )
-                lcs = lcs_confirm(pt, cfg.lcs_cap_chars).filter(
-                    F.col("lcs_len") >= cfg.lcs_min_len)
-                self.store.write(lcs, "containment", self._chash)
+                lcs = stages.confirm_containment(
+                    stages.containment_candidates(scored, cfg), docs, cfg)
             else:
-                self.store.write(
-                    self.spark.createDataFrame(
-                        [], "src bigint, dst bigint, lcs_len bigint, containment double"),
-                    "containment", self._chash)
+                lcs = self.spark.createDataFrame(
+                    [], "src bigint, dst bigint, lcs_len bigint, containment double")
+            self.store.write(lcs, "containment", self._chash)
 
         def _components():
             # --- stage 6: connected components (ref: CC at ccthreshold) ---
             if not done("assignments"):
-                cc_edges = scored.filter(F.col("jaccard") >= cfg.cc_threshold) \
-                                 .select("src", "dst")
-                asg = connected_components(
-                    cc_edges, vertices=docs.select("doc_id"),
-                    checkpoint_every=cfg.checkpoint_every_cc_iters)
-                self.store.write_sharded(asg, "assignments", self._chash,
-                                         self.n_shards)
+                stages.write_assignments(self, docs, scored)
             if not done("component_info"):
-                asg = self.store.read(self.spark, "assignments")
-                info = asg.groupBy("component_id").agg(F.count("*").alias("count"))
-                self.store.write_sharded(info, "component_info", self._chash,
-                                         self.n_shards,
-                                         id_col="component_id")
+                stages.write_component_info(self)
 
         def _outliers():
             # --- stage 7: outliers (ref: bottom 5% NN distance) ---
             # best_nn persists as its own stage so incremental updates can
-            # re-derive it only for docs touched by new edges (anti-join)
-            # instead of windowing the full pair table per batch
+            # re-derive it only for docs touched by new edges
             if not done("best_nn"):
-                bn = best_neighbor(docs, scored, sim_col="jaccard")
-                # shard files sorted by best_sim: the outlier cut's pushed
-                # range predicate skips row groups on incremental batches
-                self.store.write_sharded(bn, "best_nn", self._chash,
-                                         self.n_shards,
-                                         sort_within=["best_sim"])
+                stages.write_best_nn(self, docs, scored)
             if not done("outliers"):
-                n_docs = (self.store.read_json("extract_counts") or {}).get("valid")
-                bn = self.store.read(self.spark, "best_nn")
-                out = outliers_by_percentile(bn, cfg.outlier_pct, n=n_docs)
-                self.store.write_sharded(out, "outliers", self._chash,
-                                         self.n_shards)
-                # realized cutoff -> marker: incremental batches prune at it
-                # instead of re-running the percentile scan (outliers.py)
-                c = self.store.read(self.spark, "outliers") \
-                    .agg(F.max("best_sim")).first()[0]
-                m = self.store.read_marker("outliers") or {}
-                self.store.refresh_marker(
-                    "outliers", self._chash,
-                    counters={**m.get("counters", {}),
-                              "cutoff": None if c is None else float(c)})
+                stages.write_outliers(self)
 
         futs = [pool.submit(f) for f in
                 (_similarity_knn, _containment, _components, _outliers)]

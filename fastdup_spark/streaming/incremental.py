@@ -10,17 +10,22 @@ new WARC pages, keyed by a `warc_ts` high-water mark:
     index (so new docs pair with both old and new docs) — the same plan a
     Structured Streaming foreachBatch sink would run;
   * verify on the new pairs only (append to pairs_scored/similarity);
+    verify scoring, the similarity rows, the CC edges, the LCS confirm
+    and every derived table's write layout are the same definitions
+    run() uses (plans/stages.py);
   * knn / best_nn re-derived ONLY for docs incident to the batch's new
     edges (plus the new docs) — unaffected rows carry over via anti-join;
   * connected components resolved by CONTRACTION: batches only ever ADD
     edges, so merging is monotone — map the new edges' endpoints to their
-    existing component labels, resolve the tiny component-level graph with
-    a driver-side union-find (it is broadcast-sized by construction; a
-    distributed large-star/small-star fallback guards giant backfills),
-    and relabel the assignments table through the merge map. Component
-    labels are min-doc_ids and the union-find keeps the min as root, so
-    merged labels come out exactly as a from-scratch run would produce.
-    The crash-heal path still re-resolves globally from pairs_scored.
+    existing component labels, resolve the tiny component-level graph
+    with the package's one union-find (operators/cc.py ``label_changes``
+    over one Arrow collect — broadcast-sized by construction; above cc's
+    2M-edge driver gate the distributed large-star/small-star rounds
+    take over), and relabel the assignments table through the merge map.
+    Component labels are min-doc_ids and the union-find roots each set at
+    its min, so merged labels come out exactly as a from-scratch run
+    would produce. The crash-heal path re-resolves globally from
+    pairs_scored with run()'s own stage writes.
 
 O(batch) scaling (round-5 verdict #2/#3): the doc-keyed base tables
 (`extracted`, `signatures`) share the derived tables' bucket(N, doc_id)
@@ -49,8 +54,8 @@ _DRIVER_IDS_MAX the batch's (doc_id, is_valid) rows are collected to the
 driver ONCE at update start; every shard list (membership scan,
 idempotency scans, the affected-doc histogram, the new-doc singleton
 shards) and every batch count then comes from pure Python instead of a
-dedicated Spark job, and the affected set / CC edge list are literal
-frames built from one collect of the pinned scored increment. This cuts a
+dedicated Spark job, and the affected set is a literal frame built from
+one collect of the pinned scored increment. This cuts a
 clean update from 52 to 41 Spark jobs (measured by job-group id count at
 n=400) — on small batches the eliminated fixed per-job overhead, not data
 volume, is the cost. Above the cap every site keeps the DataFrame shape.
@@ -123,15 +128,10 @@ _BROADCAST_BATCH_MAX = 2_000_000
 # verdict #3). Above the cap (bulk backfill) every site falls back to the
 # DataFrame shape unchanged.
 _DRIVER_IDS_MAX = 200_000
-# Largest new-edge set resolved by the driver-side union-find contraction;
-# bigger batches (bulk backfills) fall back to the distributed
-# large-star/small-star job. 2M labeled edges ≈ 50 MB on the driver.
-_CONTRACT_COLLECT_MAX = 2_000_000
 
-from fastdup_spark.functions.signatures import with_signatures
-from fastdup_spark.functions.similarity import exact_jaccard_expr, hamming_expr, sig_jaccard_expr
-from fastdup_spark.operators.cc import connected_components
+from fastdup_spark.operators import cc
 from fastdup_spark.operators.lsh import band_buckets
+from fastdup_spark.plans import stages
 from fastdup_spark.plans.store import SHARD_COL, shard_expr
 
 
@@ -261,15 +261,7 @@ def incremental_update(fd, new_pages: DataFrame,
 
     # --- ONE extraction pass, materialized once (round-5 ADVICE: the old
     # shape re-ran the extraction lineage for every count/split consumer) ---
-    from fastdup_spark.functions.extract import extract_text_udf
-    udf = extract_text_udf(cfg.min_text_chars)
-    ext = new_pages.withColumn("_ex", udf(F.col("html"))).select(
-        F.xxhash64("url").alias("doc_id"),
-        "url", "warc_ts", "lang",
-        F.col("_ex.extracted_text").alias("text"),
-        F.col("_ex.error_code").alias("error_code"),
-        (F.col("_ex.error_code") == "").alias("is_valid"),
-    ).localCheckpoint(eager=True)
+    ext = stages.extract_pages(new_pages, cfg).localCheckpoint(eager=True)
     n_batch_raw = ext.count()  # cheap: counts the pinned batch, not lineage
     _mark("extract")
 
@@ -420,9 +412,7 @@ def incremental_update(fd, new_pages: DataFrame,
                          "deferred until redelivery commits them",
                          ghosts.count())
 
-    new_sigs = with_signatures(new_docs, cfg).select(
-        "doc_id", "minhash", "simhash", "shingles", "n_shingles"
-    ).localCheckpoint(eager=True)
+    new_sigs = stages.signature_rows(new_docs, cfg).localCheckpoint(eager=True)
     _mark("signatures")
     new_buckets = band_buckets(new_sigs, cfg.lsh_bands, cfg.lsh_rows) \
         .withColumn("salt", F.lit(0))
@@ -495,22 +485,7 @@ def incremental_update(fd, new_pages: DataFrame,
             F.broadcast(new_ids), "doc_id", "left_anti")
     all_sigs_narrow = all_sigs_narrow \
         .unionByName(new_sigs.select("doc_id", "minhash", "simhash", "shingles"))
-    scored_new = (
-        cand
-        .join(all_sigs_narrow.select(F.col("doc_id").alias("src"),
-                                     F.col("minhash").alias("mh_a"),
-                                     F.col("simhash").alias("sh_a"),
-                                     F.col("shingles").alias("g_a")), "src")
-        .join(all_sigs_narrow.select(F.col("doc_id").alias("dst"),
-                                     F.col("minhash").alias("mh_b"),
-                                     F.col("simhash").alias("sh_b"),
-                                     F.col("shingles").alias("g_b")), "dst")
-        .withColumn("sig_jaccard", sig_jaccard_expr(F.col("mh_a"), F.col("mh_b")))
-        .filter(F.col("sig_jaccard") >= cfg.sig_jaccard_prefilter)
-        .withColumn("hamming", hamming_expr(F.col("sh_a"), F.col("sh_b")))
-        .withColumn("jaccard", exact_jaccard_expr(F.col("g_a"), F.col("g_b")))
-        .select("src", "dst", "sig_jaccard", "hamming", "jaccard")
-    )
+    scored_new = stages.score_pairs(cand, all_sigs_narrow, cfg)
 
     def _append(df: DataFrame, stage: str, partition_by: list[str] | None = None):
         # sharded stage tables (extracted/signatures) keep their bucket
@@ -550,10 +525,8 @@ def incremental_update(fd, new_pages: DataFrame,
         return df.join(F.broadcast(present), "doc_id", "left_anti")
 
     def _append_doc_stats():
-        from fastdup_spark.operators.stats import doc_stats as doc_stats_op
-        new_stats = doc_stats_op(new_docs.select("doc_id", "text"),
-                                 id_col="doc_id")
-        _append(_dedup_batch_rows(new_stats, "doc_stats"), "doc_stats")
+        _append(_dedup_batch_rows(stages.doc_stats_rows(new_docs), "doc_stats"),
+                "doc_stats")
 
     # Append ordering IS the crash-repair contract:
     #   1. `signatures` STRICTLY FIRST — it is the uncommitted-doc sentinel
@@ -604,8 +577,7 @@ def incremental_update(fd, new_pages: DataFrame,
             # them — zero pair-table reads, zero anti-joins on the clean path
             rel_active = scored_new
             n_rel = n_pairs
-            sim_new = rel_active.filter(F.col("jaccard") >= cfg.threshold) \
-                .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
+            sim_new = stages.similarity_rows(rel_active, cfg)
         else:
             # persisted pairs touching the batch (repairs a crashed
             # history) PLUS the batch's own fresh increment — disjoint by
@@ -618,25 +590,20 @@ def incremental_update(fd, new_pages: DataFrame,
                 rel_active = _no_ghost(rel_active, ghosts)
             rel_active = rel_active.localCheckpoint(eager=True)
             n_rel = rel_active.count()
-            sim_new = (
-                rel_active.filter(F.col("jaccard") >= cfg.threshold)
-                .select("src", "dst", "jaccard", "sig_jaccard", "hamming")
-                .join(_touching(store.read(spark, "similarity")
-                                .select("src", "dst"), new_ids),
-                      ["src", "dst"], "left_anti")
-            )
+            sim_new = stages.similarity_rows(rel_active, cfg).join(
+                _touching(store.read(spark, "similarity")
+                          .select("src", "dst"), new_ids),
+                ["src", "dst"], "left_anti")
         if _debug is not None:
             _debug["sim_new_plan"] = _plan_text(sim_new)
 
         def _append_containment():
             if not cfg.lcs_enabled:
                 return
-            from fastdup_spark.functions.lcs import lcs_confirm
             # LCS only on rel_active's sub-threshold pairs; the containment
             # anti-join exists only on crash replays (batch-scoped both
             # sides)
-            sub = rel_active.filter(F.col("jaccard") < cfg.threshold) \
-                .select("src", "dst")
+            sub = stages.containment_candidates(rel_active, cfg)
             if not clean_history:
                 sub = sub.join(_touching(store.read(spark, "containment")
                                          .select("src", "dst"), new_ids),
@@ -659,15 +626,7 @@ def incremental_update(fd, new_pages: DataFrame,
             else:
                 texts = fd.docs().select("doc_id", "text")
             texts = texts.unionByName(new_docs.select("doc_id", "text"))
-            pt = (
-                sub.join(texts.select(F.col("doc_id").alias("src"),
-                                      F.col("text").alias("text_a")), "src")
-                   .join(texts.select(F.col("doc_id").alias("dst"),
-                                      F.col("text").alias("text_b")), "dst")
-            )
-            lcs_new = lcs_confirm(pt, cfg.lcs_cap_chars).filter(
-                F.col("lcs_len") >= cfg.lcs_min_len)
-            _append(lcs_new, "containment")
+            _append(stages.confirm_containment(sub, texts, cfg), "containment")
 
         late_futs = [
             pool.submit(_append, scored_new, "pairs_scored"),
@@ -705,22 +664,18 @@ def incremental_update(fd, new_pages: DataFrame,
         # this batch — a replay of a crashed batch finds its pairs here
         # even though its own scored_new anti-joined them away. Ghost-
         # touching edges are absent by construction (deferred).
+        # rel_active is pinned: the CC edges filter it without recomputing.
         if new_ids_local is not None and n_rel <= _DRIVER_IDS_MAX:
-            # driver-side scope: rel_active is pinned and batch-bounded —
-            # ONE collect yields the affected set, its shard histogram, and
-            # the CC edge list, replacing the affected-pin job, the shard-
-            # histogram job, and the new-doc shard collects in finalize
-            rel_rows = rel_active.select("src", "dst", "jaccard").collect()
+            # driver-side scope: rel_active is batch-bounded — ONE collect
+            # yields the affected set and its shard histogram, replacing
+            # the affected-pin job, the shard-histogram job, and the
+            # new-doc shard collects in finalize
+            rel_rows = rel_active.select("src", "dst").collect()
             affected_local = sorted({r["src"] for r in rel_rows}
                                     | {r["dst"] for r in rel_rows}
                                     | set(new_ids_local))
             affected = spark.createDataFrame(
                 [(i,) for i in affected_local], "doc_id bigint")
-            cc_local = [(int(r["src"]), int(r["dst"])) for r in rel_rows
-                        if r["jaccard"] >= cfg.cc_threshold]
-            new_cc_edges = spark.createDataFrame(
-                cc_local, "src bigint, dst bigint") if cc_local else \
-                spark.createDataFrame([], "src bigint, dst bigint")
         else:
             affected_local = None
             affected = (
@@ -729,8 +684,7 @@ def incremental_update(fd, new_pages: DataFrame,
                 .unionByName(new_ids)
                 .distinct()
             )
-            new_cc_edges = rel_active.filter(
-                F.col("jaccard") >= cfg.cc_threshold).select("src", "dst")
+        new_cc_edges = stages.cc_edges(rel_active, cfg)
         new_ids_arg = new_ids
     touched = _finalize_bookkeeping(fd, n_appended_pairs=int(n_pairs),
                                     affected=affected,
@@ -802,51 +756,6 @@ def _shard_of(label: int, n_shards: int) -> int:
     """Python twin of shard_expr: pmod semantics for (possibly negative)
     64-bit ids — Python's % already yields a non-negative result."""
     return int(label % n_shards)
-
-
-def _union_find_merge(labeled_edges: list[tuple[int, int]]) -> dict[int, int]:
-    """Driver-side contraction: union-find over component-label edges,
-    keeping the MIN label as each root (exactly the min-doc_id label a
-    from-scratch large-star/small-star resolve would produce). Returns
-    {old_label -> new_label} for labels that change (identity omitted)."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in labeled_edges:
-        ra, rb = find(a), find(b)
-        if ra == rb:
-            continue
-        if rb < ra:
-            ra, rb = rb, ra
-        parent[rb] = ra  # larger root under smaller -> root == min of set
-    return {x: find(x) for x in parent if find(x) != x}
-
-
-def _record_outlier_cutoff(fd, extra: dict | None = None,
-                           out_frame: DataFrame | None = None) -> None:
-    """Stamp the realized outlier cutoff (max best_sim in the written
-    table) into the outliers marker — the next batch prunes its best_nn
-    scan at this value instead of re-running the percentile job. ``extra``
-    counters (e.g. which rank path the cut took) ride along for
-    observability/tests. ``out_frame``: the already-materialized new
-    outlier set — its content equals the post-write table by construction
-    (untouched shards hold identical rows), so aggregating it skips the
-    write->read barrier on the scoped path."""
-    src = out_frame if out_frame is not None \
-        else fd.store.read(fd.spark, "outliers")
-    c = src.agg(F.max("best_sim")).first()[0]
-    m = fd.store.read_marker("outliers") or {}
-    fd.store.refresh_marker(
-        "outliers", fd._chash,
-        counters={**m.get("counters", {}), **(extra or {}),
-                  "cutoff": None if c is None else float(c)})
 
 
 def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
@@ -962,26 +871,14 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
         affected = None  # pre-shard-layout work dir: full rebuild heals it
 
     if affected is None:
+        # the same stage writes as run() (plans/stages.py)
         touched = counts["valid"]
         docs_all = fd.docs()
-        store.write_sharded(knn_truncate(sim_all, cfg.knn_k), "knn",
-                            fd._chash, n_sh, counters={"k": cfg.knn_k})
-        bn = best_neighbor(docs_all, scored_all, sim_col="jaccard") \
-            .localCheckpoint(eager=True)
-        store.write_sharded(bn, "best_nn", fd._chash, n_sh,
-                            sort_within=["best_sim"])
-        out = outliers_by_percentile(store.read(spark, "best_nn"),
-                                     cfg.outlier_pct, n=counts["valid"])
-        store.write_sharded(out, "outliers", fd._chash, n_sh)
-        _record_outlier_cutoff(fd)
-        edges = scored_all.filter(
-            F.col("jaccard") >= cfg.cc_threshold).select("src", "dst")
-        asg = connected_components(edges, vertices=docs_all.select("doc_id"))
-        store.write_sharded(asg, "assignments", fd._chash, n_sh)
-        info = store.read(spark, "assignments").groupBy("component_id") \
-            .agg(F.count("*").alias("count"))
-        store.write_sharded(info, "component_info", fd._chash, n_sh,
-                            id_col="component_id")
+        stages.write_knn(fd, sim_all)
+        stages.write_best_nn(fd, docs_all, scored_all)
+        stages.write_outliers(fd)
+        stages.write_assignments(fd, docs_all, scored_all)
+        stages.write_component_info(fd)
     else:
         if affected_local is not None:
             # the affected set is already a driver-side literal frame —
@@ -1011,14 +908,13 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
         def _upd_knn():
             # fresh rows for affected docs; carried rows ONLY from the
             # affected shards (partition-pruned scan), other shards untouched
-            aff_sim = aff_pairs.filter(F.col("jaccard") >= cfg.threshold)
-            knn_aff = knn_truncate(aff_sim, cfg.knn_k) \
-                .join(aff, "doc_id", "left_semi")
+            knn_aff = knn_truncate(stages.similarity_rows(aff_pairs, cfg),
+                                   cfg.knn_k).join(aff, "doc_id", "left_semi")
             knn_carry = store.read(spark, "knn", keep_shard=True) \
                 .filter(F.col(SHARD_COL).isin(aff_shards)).drop(SHARD_COL) \
                 .join(aff, "doc_id", "left_anti")
-            store.overwrite_shards(knn_carry.unionByName(knn_aff), "knn",
-                                   fd._chash, aff_shards)
+            stages.overwrite_derived(fd, knn_carry.unionByName(knn_aff),
+                                     "knn", aff_shards)
 
         def _upd_best_nn_outliers():
             # best_nn: one row per affected doc (aff IS the doc set — no
@@ -1027,9 +923,8 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
             bn_carry = store.read(spark, "best_nn", keep_shard=True) \
                 .filter(F.col(SHARD_COL).isin(aff_shards)).drop(SHARD_COL) \
                 .join(aff, "doc_id", "left_anti")
-            store.overwrite_shards(bn_carry.unionByName(bn_aff), "best_nn",
-                                   fd._chash, aff_shards,
-                                   sort_within=["best_sim"])
+            stages.overwrite_derived(fd, bn_carry.unionByName(bn_aff),
+                                     "best_nn", aff_shards)
 
             # outliers: the percentile cut is GLOBAL (it moves with every
             # batch), so membership is recomputed from the updated best_nn —
@@ -1057,10 +952,10 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                                  .join(old_out_ids, "doc_id", "left_anti"))
                 out_shards = sorted(set(aff_shards)
                                     | set(_shards_of(sym_diff, n_sh)))
-            store.overwrite_shards(
-                out_new.filter(shard_expr("doc_id", n_sh).isin(out_shards)),
-                "outliers", fd._chash, out_shards)
-            _record_outlier_cutoff(fd, extra={
+            stages.overwrite_derived(
+                fd, out_new.filter(shard_expr("doc_id", n_sh).isin(out_shards)),
+                "outliers", out_shards)
+            stages.record_outlier_cutoff(fd, extra={
                 "rank_path": rank_stats.get("path")}, out_frame=out_new)
 
         # shard set of the batch's new docs — pure Python when the ids are
@@ -1098,15 +993,18 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                         F.coalesce("cb", F.col("dst")).alias("dst"))
                 .filter(F.col("src") != F.col("dst"))
             )
-            if n_edges_hint is not None and n_edges_hint <= _CONTRACT_COLLECT_MAX:
-                merge_map = _union_find_merge(
-                    [(r["src"], r["dst"]) for r in comp_edges.collect()])
+            if n_edges_hint is not None \
+                    and n_edges_hint <= cc._CC_DRIVER_EDGES_MAX:
+                # one Arrow collect + cc.py's union-find; labels are min
+                # doc_ids and the kernel roots each set at its min, so
+                # merged labels come out exactly as a from-scratch run's
+                merge_map = cc.label_changes(*cc.collect_edges(comp_edges))
             else:
                 # distributed resolve, then collect the (broadcast-sized)
                 # merge map — identity rows dropped as below
                 merge_map = {
                     r["doc_id"]: r["component_id"]
-                    for r in connected_components(comp_edges).collect()
+                    for r in cc.connected_components(comp_edges).collect()
                     if r["doc_id"] != r["component_id"]}
             # identity mappings are absent from merge_map: those docs keep
             # their label, and keeping them would rewrite every shard of a
@@ -1140,8 +1038,7 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                     .filter(F.col(SHARD_COL).isin(asg_shards)).drop(SHARD_COL)
                     .unionByName(new_doc_rows)
                 )
-            store.overwrite_shards(asg_part, "assignments", fd._chash,
-                                   asg_shards)
+            stages.overwrite_derived(fd, asg_part, "assignments", asg_shards)
 
             # --- component_info: DRIVER-SIDE count-merge. Counts are
             # additive under contraction: each surviving label's new count
@@ -1191,8 +1088,8 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
                         F.col("doc_id").alias("component_id"),
                         F.lit(1).cast("long").alias("count")))
                 )
-            store.overwrite_shards(info_part, "component_info", fd._chash,
-                                   cid_shards)
+            stages.overwrite_derived(fd, info_part, "component_info",
+                                     cid_shards)
 
         _mark("fin_scope")
         from concurrent.futures import ThreadPoolExecutor
@@ -1209,16 +1106,7 @@ def _finalize_bookkeeping(fd, n_appended_pairs: int = 0,
     _mark("fin_derived")
 
     # refresh run_manifest so summary() reflects post-update state
-    from fastdup_spark.operators.stats import summary_stats
-    summ = summary_stats(
-        n_pages=counts["valid"] + counts["bad"], n_valid=counts["valid"],
-        n_quarantined=counts["bad"],
-        component_info=store.read(spark, "component_info"),
-        n_pairs=store.read_marker("similarity")["rows"],
-        n_outliers=store.read_marker("outliers")["rows"],
-    )
-    store.write_json({"config": cfg.to_dict(), "config_hash": fd._chash,
-                      "summary": summ}, "run_manifest")
+    stages.write_manifest(fd)
     _mark("fin_manifest")
 
     # membership bitmap upkeep (streaming/membership.py): insert this

@@ -2,8 +2,12 @@
 deterministic min-doc_id component ids (FIXTURES.md §C)."""
 
 import numpy as np
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from fastdup_spark.operators.cc import connected_components
+from fastdup_spark.operators.cc import (
+    connected_components, label_changes, union_find,
+)
 
 
 class UnionFind:
@@ -107,15 +111,63 @@ def test_pipeline_cc_matches_oracle(fd):
 def test_driver_fast_path_matches_distributed(spark):
     # r07: edge sets at or below the driver gate resolve with arrow
     # collect + vectorized union-find; parity with the star rounds and
-    # the oracle is pinned here (both paths forced explicitly).
+    # the oracle is pinned here (both paths forced explicitly). String ids
+    # are not integral: under the gate they must fall through to the star
+    # rounds instead of failing the int64 cast.
     rng = np.random.default_rng(11)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, 400, size=(800, 2)) if a != b]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    v = spark.createDataFrame([(x,) for x in range(450)], "doc_id long")
-    fast = {r["doc_id"]: r["component_id"]
-            for r in connected_components(e, v).collect()}
-    dist = {r["doc_id"]: r["component_id"]
-            for r in connected_components(
-                e, v, driver_edges_max=0).collect()}
-    assert fast == dist == _oracle(edges, vertices=range(450))
+    for typ, conv in (("long", int), ("string", str)):
+        es = [(conv(a), conv(b)) for a, b in edges]
+        vs = [conv(x) for x in range(450)]
+        e = spark.createDataFrame(es, f"src {typ}, dst {typ}")
+        v = spark.createDataFrame([(x,) for x in vs], f"doc_id {typ}")
+        fast = {r["doc_id"]: r["component_id"]
+                for r in connected_components(e, v).collect()}
+        dist = {r["doc_id"]: r["component_id"]
+                for r in connected_components(
+                    e, v, driver_edges_max=0).collect()}
+        assert fast == dist == _oracle(es, vertices=vs), typ
+
+
+def _bfs_labels(edges):
+    """Min-member label of every endpoint, by breadth-first search."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, todo = {start}, [start]
+        while todo:
+            for m in adj[todo.pop()]:
+                if m not in comp:
+                    comp.add(m)
+                    todo.append(m)
+        out.update(dict.fromkeys(comp, min(comp)))
+    return out
+
+
+_INT64 = st.integers(min_value=-2**63, max_value=2**63 - 1)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.data())
+def test_union_find_matches_bfs_oracle(data):
+    """The one union-find kernel: labels equal a BFS min-member oracle on
+    signed int64 ids (doc ids are xxhash64), whatever the edge order and
+    with duplicate edges and self-loops; the contraction merge map holds
+    exactly the ids whose label changes."""
+    pool = data.draw(st.lists(_INT64, min_size=1, max_size=16, unique=True))
+    node = st.sampled_from(pool)
+    edges = data.draw(st.lists(st.tuples(node, node), max_size=40))
+    edges = data.draw(st.permutations(edges + edges[: len(edges) // 2]))
+    src = np.array([a for a, _ in edges], dtype=np.int64)
+    dst = np.array([b for _, b in edges], dtype=np.int64)
+    oracle = _bfs_labels(edges)
+    ids, labels = union_find(src, dst)
+    assert dict(zip(ids.tolist(), labels.tolist())) == oracle
+    assert label_changes(src, dst) == {
+        n: lab for n, lab in oracle.items() if n != lab}

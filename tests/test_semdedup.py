@@ -184,9 +184,14 @@ def test_cluster_components_match_edge_cc(spark):
     rows += [(200, 1, [0.0, 0.0, 0.0]),       # zero-norm
              (201, 1, None),                   # NULL vector
              (202, 1, [1.0, 0.2])]             # mismatched length
+    # thresholds off the 0.001 grid: a pair whose cosine rounds to 0.872
+    # (0.9) is NOT an edge at 0.8725 (0.9001), though it clears t - 5e-4
+    for cl, c in ((10, 0.8723), (11, 0.9002)):
+        rows += [(cl * 100, cl, [1.0, 0.0, 0.0]),
+                 (cl * 100 + 1, cl, [c, (1.0 - c * c) ** 0.5, 0.0])]
     df = spark.createDataFrame(
         rows, "vec_id long, cluster long, embedding array<double>")
-    for thr in (0.95, 0.5, 0.0):
+    for thr in (0.95, 0.5, 0.0, 0.8725, 0.9001):
         new = {r["vec_id"]: r["component_id"]
                for r in cluster_components(df, thr).collect()}
         edges = semdedup_edges(df, thr)
